@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.SessionMemo
+
 /** Driver-run benchmark: one JSON line with per-query seconds.
   *
   * Honesty contract: a query that throws is recorded under "errors" with
@@ -8,27 +10,11 @@ import org.apache.spark.sql.SparkSession
   * speedup. `SPARK_GRAFT_ONLY=q_a,q_b` restricts to a subset (local
   * iteration only; the driver runs the full set).
   *
-  * Cost-attribution caveat: queries that share a session-memoized
-  * computation charge the shared work to whichever of them runs FIRST
-  * in map-iteration order; the others read the cache. The groups:
-  * the near-dup trio (Dedup.nearDupPairsShared / nearDupLabels), the
-  * exact-substring pair (Dedup.substrDupPosShared), and — since the
-  * r12 optimization round — the event-graph family (q_pagerank/q_hits/
-  * q_triangle_stats/q_kcore/q_kcore_fixpoint/q_label_propagation/
-  * q_reach_paths/q_graph_degrees share GraphOps.sharedEdges +
-  * sharedNodes), the containment pair (q_containment_join +
-  * q_pagerank_docs share Dedup.containmentPairsShared), the typo
-  * twins (MiningOps' typoNamePairsShared), the time-series family
-  * (q_seasonality/q_acf/q_ljung_box/q_cusum/q_stl_decompose/
-  * q_seasonal_anomalies/q_siegel_trend/q_theil_sen share
-  * TimeSeries.sharedDailyRevenue; the STL pair additionally shares
-  * TimeSeries.sharedStlResidual), the Gram pair (q_embed_gram +
-  * q_pca_project share Similarity.sharedEmbedGram), the IVF pair
-  * (q_ann_ivf_topk + q_ann_ivfpq_topk share
-  * Similarity.sharedKmeansCentroids), and the BPE trio (q_bpe_merges/
-  * q_bpe_encode/q_sequence_pack_bpe share TextOps.bpeTrainShared).
-  * Per-key numbers for those keys are attribution, not standalone
-  * cost — compare the GROUP's sum across rounds, or the run total.
+  * Cost attribution: keys that share a [[SessionMemo]] entry charge
+  * its build to whichever of them runs first; the others read it. The
+  * artifact's `memo_groups` names, per memo group, the member keys, the
+  * keys that paid a build, the build seconds and the hit count — compare
+  * a group's sum across runs, or the run total, not its members' times.
   */
 object Bench {
   /** Driver-facing final stdout line. The driver keeps only a BOUNDED
@@ -40,8 +26,9 @@ object Bench {
     * queries/sf) with the TOP-K most expensive queries — the ones that
     * carry the total — greedily packed under `budget` bytes so the
     * line survives the tail complete, plus `queries_omitted` (count)
-    * and `omitted_max_s` (upper bound on every omitted key's seconds)
-    * so a consumer knows exactly what the truncation hides. No query
+    * and `omitted_max_s` (upper bound on every omitted key's seconds,
+    * clamped to the 99999.999 its width is reserved for) so a consumer
+    * knows exactly what the truncation hides. No query
     * is removed from the RUN: all keys are timed, summed into `value`,
     * and recorded in the artifact file + the early `total_full` stdout
     * line, which keep the complete map. Selection is by measured
@@ -54,8 +41,9 @@ object Bench {
     val total = ok.map(_._2).sum
     val ranked = ok.sortBy { case (k, v) => (-v, k) }
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${ok.size},"errors":$nErrors,"""
+    val omittedCap = 99999.999
     val tailFixedMax = // worst-case suffix: omitted fields + load + sf
-      s""""queries_omitted":${ok.size},"omitted_max_s":99999.999,$loadJson,"sf":"$sfDir"}""".length
+      s""""queries_omitted":${ok.size},"omitted_max_s":${fmt(omittedCap)},$loadJson,"sf":"$sfDir"}""".length
     var used = head.length + "\"queries\":{}".length + tailFixedMax
     val taken = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var i = 0
@@ -67,11 +55,41 @@ object Bench {
       else full = false
     }
     val omitted = ranked.drop(taken.length)
-    val omittedMax = if (omitted.isEmpty) 0.0 else omitted.map(_._2).max
+    val omittedMax =
+      if (omitted.isEmpty) 0.0 else math.min(omittedCap, omitted.map(_._2).max)
     val qs = taken.map { case (k, v) => s""""$k":${fmt(v)}""" }
       .mkString("{", ",", "}")
     head + s""""queries":$qs,"queries_omitted":${omitted.length},""" +
       s""""omitted_max_s":${fmt(omittedMax)},$loadJson,"sf":"$sfDir"}"""
+  }
+
+  /** The artifact's `memo_groups` object from the [[SessionMemo]]
+    * snapshot taken after each key, in run order: a key whose snapshot
+    * first shows an entry paid for its build, and a key that raised an
+    * entry's hit count reused it. Both are the group's members.
+    */
+  private[graft] def memoGroupsJson(
+      steps: Seq[(String, Seq[SessionMemo.Stat])]): String = {
+    def fmt(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def strs(xs: Iterable[String]): String =
+      xs.map(x => s""""$x"""").mkString("[", ",", "]")
+    import scala.collection.mutable.{LinkedHashMap, LinkedHashSet}
+    val members, paidBy = LinkedHashMap.empty[String, LinkedHashSet[String]]
+    var last = Map.empty[(String, String), SessionMemo.Stat]
+    for ((key, stats) <- steps; st <- stats) {
+      val prev = last.get((st.group, st.entry))
+      if (prev.isEmpty)
+        paidBy.getOrElseUpdate(st.group, LinkedHashSet.empty) += key
+      if (prev.forall(_.hits < st.hits))
+        members.getOrElseUpdate(st.group, LinkedHashSet.empty) += key
+      last += (st.group, st.entry) -> st
+    }
+    members.map { case (g, ms) =>
+      val entries = last.values.filter(_.group == g)
+      s""""$g":{"members":${strs(ms)},"paid_by":${strs(paidBy(g))},""" +
+        s""""build_s":${fmt(entries.map(_.buildS).sum)},"hits":${entries.map(_.hits).sum}}"""
+    }.mkString("{", ",", "}")
   }
 
   /** (load1, iowait_jiffies, steal_jiffies, total_jiffies) from
@@ -129,6 +147,7 @@ object Bench {
     // guide §1 — documented in OPTIMIZATION_r13.md with the old
     // numbers kept; totals drop by the first-touch tax, so cross-round
     // total comparisons must note it.
+    val warmup0 = System.nanoTime()
     try {
       val buf = new Array[Byte](1 << 20)
       def walk(f: java.io.File): Unit =
@@ -140,8 +159,10 @@ object Bench {
         }
       walk(new java.io.File(sfDir))
     } catch { case _: Exception => () } // warmup must never fail the bench
+    val warmupIoS = (System.nanoTime() - warmup0) / 1e9
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val memoSteps = Seq.newBuilder[(String, Seq[SessionMemo.Stat])]
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
       // execute the query's OWN physical plan (projections, sorts and
@@ -149,7 +170,9 @@ object Bench {
       // and eliminate the sort, timing a bare scan instead of the query
       val err = try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
         catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-      (name, (System.nanoTime() - t0) / 1e9, err)
+      val secs = (System.nanoTime() - t0) / 1e9
+      memoSteps += name -> SessionMemo.snapshot()
+      (name, secs, err)
     }
     val ok = results.collect { case (k, v, None) => k -> v }
     val errs = results.collect { case (k, _, Some(m)) => k -> m }
@@ -230,10 +253,13 @@ object Bench {
           None
       }
       else None)
+    // the artifact adds what the stdout lines leave out
+    val artifact = line.dropRight(1) +
+      s""","warmup_io_s":${fmt(warmupIoS)},"memo_groups":${memoGroupsJson(memoSteps.result())}}"""
     outFile.foreach { f =>
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(f),
-          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          (artifact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
         System.err.println(s"[bench] artifact written to $f" +
           (if (!promote && !sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
             " (run record; set SPARK_GRAFT_BENCH_PROMOTE=1 to update the committed artifact-of-record)"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{GraftSession, SessionMemo, Tables}
 import graft.functions.TextOps
 
 /** Deduplication for training-data pipelines (north-star Tier B):
@@ -1086,6 +1086,13 @@ object Dedup {
 
   // ---- near-dup clustering (connected components) ----------------------
 
+  /** ONE definition of the lineage-cut policy (reliable checkpoint when
+    * the caller configured a dir — cluster production — else local).
+    */
+  private def cut(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+
   /** Connected components of an undirected edge list: returns one
     * `(id, comp)` row per endpoint, where `comp` is the minimum id
     * reachable from `id` — the canonical cluster label.
@@ -1101,15 +1108,16 @@ object Dedup {
     * round counter — the same structure GraphX/Pregel uses; it is the
     * scale-correct shape for iterative graph algorithms on Spark.
     */
-  /** ONE definition of the lineage-cut policy (reliable checkpoint when
-    * the caller configured a dir — cluster production — else local).
-    */
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   def connectedComponents(edges: DataFrame, idCol1: String = "id1",
-      idCol2: String = "id2", maxIter: Int = 25): DataFrame = {
+      idCol2: String = "id2", maxIter: Int = 25): DataFrame =
+    componentsCheckpoint(edges, idCol1, idCol2, maxIter).drop("prev")
+
+  /** [[connectedComponents]]' last checkpointed round, still carrying
+    * the round-start label as `prev`: the relation whose blocks a holder
+    * of the labels frees with [[SessionMemo.release]].
+    */
+  private def componentsCheckpoint(edges: DataFrame, idCol1: String,
+      idCol2: String, maxIter: Int): DataFrame = {
     // Iterative self-referencing plans grow exponentially (the jump
     // join references `stepped` twice), so each round's labels must be
     // materialized WITH LINEAGE CUT — persist() alone keeps the logical
@@ -1155,61 +1163,24 @@ object Dedup {
       // labels only ever decrease, so any change shows as new < old
       converged = next.where(col("comp") < col("prev")).isEmpty
       stepped.unpersist()
-      labelsCk.unpersist() // release the superseded round's blocks
+      SessionMemo.release(labelsCk) // the superseded round's blocks
       labelsCk = next
       labels = next.drop("prev")
       it += 1
     }
     sym.unpersist()
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    labels
+    labelsCk
   }
 
-  /** Shared edge-building + components pipeline for the registered
-    * clustering queries — ONE definition, so `q_dedup_clusters` and
-    * `q_dedup_apply` cannot diverge on edge semantics.
-    *
-    * Memoized per (session, dir): [[connectedComponents]] returns
-    * lineage-cut (checkpointed, already-materialized) labels, so both
-    * registered queries — each self-contained from the harness's view —
-    * share ONE LSH + components computation per Verify/Bench run
-    * instead of recomputing the identical label set. Keyed on the
-    * session too: a cached DataFrame is unusable from any other
-    * session, and tests spin up several; entries of STOPPED sessions
-    * are evicted on every call so the memo can't pin dead sessions for
-    * the JVM lifetime. Assumes `dir`'s documents are immutable within
-    * a session — true for the driver fixtures every registered query
-    * reads (rewrite the table mid-session and you must use a new
-    * session or call the un-memoized builders directly). The compute
-    * runs OUTSIDE the map lock (get/putIfAbsent, not computeIfAbsent),
-    * so the MAP never blocks anyone for the multi-second job; the
-    * near-dup callers additionally serialize same-key first calls
-    * under a per-(session, dir) lock (see [[lockFor]]) — unrelated
-    * keys still proceed in parallel.
+  /** The public release call for long-lived library sessions: drops
+    * every [[SessionMemo]] entry, of every module, session and dir, and
+    * frees its blocks. Entries otherwise hold them until the owning
+    * session stops — right for the fixture-driven harness, heavyweight
+    * for an application that processes many corpora through one
+    * session.
     */
-  private def memoized(
-      map: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      s: SparkSession, dir: String)(compute: => DataFrame): DataFrame = {
-    map.keySet.removeIf(_._1.sparkContext.isStopped)
-    val key = (s, dir)
-    Option(map.get(key)).getOrElse {
-      val computed = compute
-      Option(map.putIfAbsent(key, computed)).getOrElse(computed)
-    }
-  }
-
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  // the shared path's inner shingle-set cache, held only until the pairs
-  // themselves are materialized (see nearDupLabels)
-  private val sharedSetsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val substrDupPosMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val containmentMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  def clearSessionMemos(): Unit = SessionMemo.clear()
 
   /** Default-parameter containment pairs over the documents table,
     * UNSORTED, memoized per (session, dir) under a LAZY persist — the
@@ -1220,16 +1191,13 @@ object Dedup {
     * (sup_id, sub_id) projection), so a Verify/Bench run pays it once
     * across both keys. What persists is the thresholded directed pair
     * list (output-bounded), never the corpus-scale shingle relations.
-    * Same lock/lifecycle discipline as [[nearDupPairsShared]].
     */
   private[graft] def containmentPairsShared(s: SparkSession,
       dir: String): DataFrame =
-    lockFor(s, dir).synchronized {
-      memoized(containmentMemo, s, dir) {
-        containmentJoin(t(s, dir, "documents"), "text", "doc_id",
-          sorted = false)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    SessionMemo("containment", s, dir) {
+      containmentJoin(t(s, dir, "documents"), "text", "doc_id",
+        sorted = false)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** The full duplicated-position build shared by the exact-substring
@@ -1295,9 +1263,7 @@ object Dedup {
     * gram-stream persist and only reachable through this registered
     * two-key composition; standalone library calls never persist).
     * Lazy persist: plan-only consumers still see the full audit-able
-    * subtree; nothing executes until the first action. Same
-    * immutable-`dir` assumption as the near-dup memos; released by
-    * [[clearSessionMemos]].
+    * subtree; nothing executes until the first action.
     */
   private def substrDupPosShared(s: SparkSession, dir: String,
       L: Int = 30): DataFrame = {
@@ -1306,65 +1272,10 @@ object Dedup {
     // callers use the default; a different-L caller must use the
     // un-memoized substrDupPosOf directly)
     require(L == 30, s"substrDupPosShared is memoized for L=30 only, got $L")
-    // same per-key lock discipline as nearDupPairsShared/nearDupLabels:
-    // without it a first call racing clearSessionMemos could re-insert
-    // a persisted relation after release or have it unpersisted
-    // mid-query
-    lockFor(s, dir).synchronized {
-      memoized(substrDupPosMemo, s, dir) {
-        substrDupPosOf(t(s, dir, "documents"), "text", "doc_id", L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    SessionMemo("substr", s, dir) {
+      substrDupPosOf(t(s, dir, "documents"), "text", "doc_id", L)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
-  // PER-KEY locks serialize each (session, dir)'s compute-and-put
-  // against nearDupLabels' cache release and clearSessionMemos:
-  // without them, a concurrent first call racing the release could
-  // re-insert a shingle-set cache entry AFTER removal (pinning it for
-  // the session lifetime), and a clear could orphan persisted blocks
-  // mid-walk. Per-KEY, not one global lock: a caller for another
-  // (session, dir) never waits behind this key's multi-second LSH+CC
-  // materialization — only same-key callers contend, and they all
-  // want the identical memoized computation anyway.
-  private val keyLocks =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
-  private def lockFor(s: SparkSession, dir: String): Object =
-    keyLocks.computeIfAbsent((s, dir), _ => new Object)
-
-  /** Explicit release hook for long-lived library sessions: unpersists
-    * and drops every memoized near-dup relation (pairs, labels, and any
-    * in-flight shingle-set cache) for ALL sessions/dirs present at call
-    * time (a key whose first compute starts after the snapshot is
-    * untouched). The memos otherwise hold their persisted blocks until
-    * the owning session stops — correct for the fixture-driven harness,
-    * heavyweight for an application that processes many corpora through
-    * one session.
-    */
-  def clearSessionMemos(): Unit = {
-    val keys = new java.util.HashSet[(SparkSession, String)](keyLocks.keySet())
-    Seq(pairsMemo, labelsMemo, sharedSetsCache, substrDupPosMemo,
-      containmentMemo).foreach(m => keys.addAll(m.keySet()))
-    keys.forEach { key =>
-      lockFor(key._1, key._2).synchronized {
-        Seq(pairsMemo, labelsMemo, sharedSetsCache, substrDupPosMemo,
-          containmentMemo).foreach { m =>
-          Option(m.remove(key)).foreach { df =>
-            try df.unpersist()
-            catch { case _: Exception => () } // a stopped session's blocks are already gone
-          }
-        }
-        keyLocks.remove(key)
-      }
-    }
-    // engine-wide hook: also release GraphOps' shared graph memo,
-    // MiningOps' shared typo name-pair memo, and TimeSeries' shared
-    // day-grain revenue memo
-    GraphOps.clearEdgesMemo()
-    MiningOps.clearNamePairsMemo()
-    TimeSeries.clearDailyMemo()
-    Similarity.clearGramMemo()
-    Similarity.clearCentroidsMemo()
-    graft.functions.TextOps.clearBpeMemo()
   }
 
   /** Default-parameter near-dup pairs over the documents table,
@@ -1376,37 +1287,39 @@ object Dedup {
     * (ExplainAudit, plan-pin specs) still see the full audit-able
     * pipeline instead of a degenerate checkpoint-RDD scan, and nothing
     * executes until the first action. The cached relation is the tiny
-    * thresholded pair list, held until the session ends.
+    * thresholded pair list. The entry also holds the shingle-set cache
+    * the pairs were built from, which [[nearDupLabels]] frees once the
+    * pairs are materialized.
     */
-  private def nearDupPairsShared(s: SparkSession, dir: String): DataFrame =
-    lockFor(s, dir).synchronized {
-      memoized(pairsMemo, s, dir) {
-        val (sets, verified) = minhashPairsCore(t(s, dir, "documents"),
-          "text", "doc_id", shingleN = 2, numHashes = 16, bands = 8,
-          threshold = 0.5, cacheSets = true)
-        sharedSetsCache.put((s, dir), sets)
-        verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+  private def nearDupPairsEntry(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) =
+    SessionMemo("neardup", s, dir, "pairs") {
+      val (sets, verified) = minhashPairsCore(t(s, dir, "documents"),
+        "text", "doc_id", shingleN = 2, numHashes = 16, bands = 8,
+        threshold = 0.5, cacheSets = true)
+      (verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        sets)
     }
 
-  // the whole compute runs under THIS KEY's lock (reentrant into
-  // nearDupPairsShared's synchronized): every mutation of the key's
-  // entries across all three memo maps is serialized, so
-  // clearSessionMemos can neither race a late putIfAbsent re-pinning
-  // a cleared relation nor orphan a persisted block mid-clear — while
-  // other (session, dir) keys proceed in parallel
+  private def nearDupPairsShared(s: SparkSession, dir: String): DataFrame =
+    nearDupPairsEntry(s, dir)._1
+
+  /** Components over the shared pairs — ONE definition, so
+    * `q_dedup_clusters` and `q_dedup_apply` cannot diverge on edge
+    * semantics, and one LSH + components computation per session serves
+    * both. The entry holds the labels and the checkpoint under them.
+    */
   private def nearDupLabels(s: SparkSession, dir: String): DataFrame =
-    lockFor(s, dir).synchronized {
-      memoized(labelsMemo, s, dir) {
-        val labels = connectedComponents(
-          nearDupPairsShared(s, dir).select(col("id1"), col("id2")))
-        // CC ran ⇒ the shared pairs are fully materialized in their own
-        // cache ⇒ the inner corpus-sized shingle-set cache is dead
-        // weight for the rest of the session — release it
-        Option(sharedSetsCache.remove((s, dir))).foreach(_.unpersist())
-        labels
-      }
-    }
+    SessionMemo("neardup", s, dir, "labels") {
+      val (pairs, sets) = nearDupPairsEntry(s, dir)
+      val ck = componentsCheckpoint(pairs.select(col("id1"), col("id2")),
+        "id1", "id2", maxIter = 25)
+      // CC ran ⇒ the shared pairs are fully materialized in their own
+      // cache ⇒ the inner corpus-sized shingle-set cache is dead
+      // weight for the rest of the session — release it
+      SessionMemo.release(sets)
+      (ck.drop("prev"), ck)
+    }._1
 
   /** Near-dup clusters over the MinHash+LSH pair graph
     * ([[minhashNearDupPairs]]): transitive closure of the pairwise

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{GraftSession, SessionMemo, Tables}
 
 /** Graph-shaped corpus operators beyond connected components
   * ([[Dedup.connectedComponents]]): link-graph construction from event
@@ -579,10 +579,8 @@ object GraphOps {
     * here is bounded by |nodes|·max_outdeg^depth — pick the loop style
     * accordingly at scale.
     */
-  // Session-memoized edge list + node set per (session, dir), same
-  // lifecycle policy as Dedup's near-dup memos: held until the session
-  // stops or [[Dedup.clearSessionMemos]] (the engine-wide release hook)
-  // runs. Originally reachPaths-only (UnionLoop re-runs the recursive
+  // Session-memoized edge list + node set per (session, dir).
+  // Originally reachPaths-only (UnionLoop re-runs the recursive
   // step's subtree per level); since r12 EVERY registered graph key
   // shares it: the whole family re-derived the SAME transition-edge
   // relation — a full events scan + per-user lag window + aggregate —
@@ -613,20 +611,15 @@ object GraphOps {
   // construction stays plan-auditable via [[transitionEdges]]' direct
   // callers (graphDegrees' oracle pins it, and the library entry points
   // kCore/hits/labelPropagation keep the raw subtree path).
-  // Per-key bench numbers for the family are attribution, not
-  // standalone cost — the Bench docstring's shared-memo caveat applies.
-  private val edgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val nodesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** The eagerly-checkpointed per-(session, dir) transition-edge
     * relation every registered graph key shares (see the memo comment
     * above for the persist-vs-checkpoint measurement).
     */
   private[graft] def sharedEdges(s: SparkSession, dir: String): DataFrame =
-    edgesMemo.computeIfAbsent((s, dir), _ =>
-      transitionEdges(t(s, dir, "events")).localCheckpoint())
+    SessionMemo("event_graph", s, dir, "edges") {
+      transitionEdges(t(s, dir, "events")).localCheckpoint()
+    }
 
   /** The eagerly-checkpointed per-(session, dir) node universe (every
     * observed props.k page id) — NOT derivable from [[sharedEdges]]: a
@@ -634,24 +627,11 @@ object GraphOps {
     * no edge row but is still a graph node.
     */
   private[graft] def sharedNodes(s: SparkSession, dir: String): DataFrame =
-    nodesMemo.computeIfAbsent((s, dir), _ =>
+    SessionMemo("event_graph", s, dir, "nodes") {
       t(s, dir, "events")
         .select(get_json_object(col("props"), "$.k").cast("int").as("node"))
         .where(col("node").isNotNull).distinct()
-        .localCheckpoint())
-
-  private[ext] def clearEdgesMemo(): Unit =
-    Seq(edgesMemo, nodesMemo).foreach { m =>
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next(); it.remove()
-        // localCheckpoint blocks are owned by the checkpointed RDD, not
-        // a cached plan — unpersist() is the correct call for any
-        // residual cached plan, and dropping the map reference lets the
-        // ContextCleaner release the checkpoint blocks once unreachable
-        try e.getValue.unpersist()
-        catch { case _: Exception => () } // a stopped session's blocks are already gone
-      }
+        .localCheckpoint()
     }
 
   def reachPaths(s: SparkSession, dir: String): DataFrame = {

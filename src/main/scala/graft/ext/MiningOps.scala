@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{GraftSession, SessionMemo, Tables}
 
 /** Frequent-itemset mining over order baskets (Agrawal & Srikant 1994's
   * support/confidence/lift vocabulary, pair-level) — the co-occurrence
@@ -180,28 +180,15 @@ object MiningOps {
   // `q_typo_pair_stats`): the SymSpell blocking + graft_edit1 verify +
   // pair distinct — the dominant cost of both keys — is byte-identical
   // between them (both run over DISTINCT c_name); only the downstream
-  // expansion differs (id pairs vs counting). Same (session, dir)
-  // memo + lifecycle policy as GraphOps' shared edges; released by
-  // [[clearNamePairsMemo]] via Dedup.clearSessionMemos. typoNamePairs
-  // already localCheckpoints internally, so the memoized relation is
+  // expansion differs (id pairs vs counting). typoNamePairs already
+  // localCheckpoints internally, so the memoized relation is
   // materialization-cut — the memo's only job is cross-key reuse.
-  private val namePairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private def typoNamePairsShared(s: SparkSession, dir: String): DataFrame =
-    namePairsMemo.computeIfAbsent((s, dir), _ =>
+    SessionMemo("typo", s, dir) {
       typoNamePairs(t(s, dir, "customer")
         .select(col("c_name").as("name")).distinct())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private[ext] def clearNamePairsMemo(): Unit = {
-    val it = namePairsMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try e.getValue.unpersist()
-      catch { case _: Exception => () } // a stopped session's blocks are already gone
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   val queries: Seq[GraftQuery] = Seq(
     GraftQuery("q_typo_pair_stats",

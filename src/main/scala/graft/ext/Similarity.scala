@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{GraftSession, SessionMemo, Tables}
 
 /** Similarity search over an embedding column (`array<float>`),
   * north-star Tier B.
@@ -243,18 +243,12 @@ object Similarity {
   // actions each) over the same embeddings table. The result is a
   // k·dim driver-side array (16×64 doubles), deterministic by
   // construction (stride-sample init, fixed iterations, 1e-9-rounded
-  // means), so sharing it is value-invisible. Same (session, dir)
-  // lifecycle discipline as the DataFrame memos; plain data, nothing
-  // to unpersist.
-  private val centroidsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), Array[(Int, Seq[Double])]]()
-
+  // means), so sharing it is value-invisible.
   private[graft] def sharedKmeansCentroids(s: SparkSession, dir: String,
       k: Int, iters: Int): Array[(Int, Seq[Double])] =
-    centroidsMemo.computeIfAbsent((s, dir, k, iters), _ =>
-      kmeansCentroids(t(s, dir, "embeddings"), k, iters))
-
-  private[ext] def clearCentroidsMemo(): Unit = centroidsMemo.clear()
+    SessionMemo("ivf", s, dir, k, iters) {
+      kmeansCentroids(t(s, dir, "embeddings"), k, iters)
+    }
 
   /** IVF list assignment: each vector goes to its nearest centroid (by
     * cosine against the broadcast centroid-table literal). `graft_srp_bucket`'s
@@ -892,23 +886,11 @@ object Similarity {
   // solve the d×d eigenproblem), yet each key re-ran the corpus-scale
   // explode+aggregate. The relation is d²-BOUNDED (d = 64 → 2080 rows
   // — never corpus-scale), so an eager localCheckpoint is the right
-  // materialization; same lifecycle and first-runner attribution
-  // caveats as TimeSeries.sharedDailyRevenue.
-  private val gramMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+  // materialization.
   private[graft] def sharedEmbedGram(s: SparkSession, dir: String): DataFrame =
-    gramMemo.computeIfAbsent((s, dir), _ =>
-      embedGramCore(t(s, dir, "embeddings")).localCheckpoint())
-
-  private[ext] def clearGramMemo(): Unit = {
-    val it = gramMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try e.getValue.unpersist()
-      catch { case _: Exception => () } // a stopped session's blocks are already gone
+    SessionMemo("gram", s, dir) {
+      embedGramCore(t(s, dir, "embeddings")).localCheckpoint()
     }
-  }
 
   /** Driver-side power iteration over a [[embedGram]]-shaped d×d matrix
     * (symmetric PSD): returns the dominant eigenvector (deterministic

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{GraftSession, SessionMemo, Tables}
 
 /** Time-series analytics over the daily order-revenue series plus
   * event-level survival analysis — the monitoring/forecast-prep family
@@ -57,20 +57,15 @@ object TimeSeries {
   // d-row relation is safe to re-derive on executor loss at any scale.
   // The explicit repartition keeps the tiny relation spread (AQE would
   // coalesce it to ONE partition — the measured theilSen/siegelTrend
-  // single-core trap). Same lifecycle as the other memos: released by
-  // [[Dedup.clearSessionMemos]] via [[clearDailyMemo]]. Per-key bench
-  // numbers for the family are attribution (first key pays the scan) —
-  // the Bench docstring's shared-memo caveat applies. Divide guards are
-  // unaffected by the lineage cut: every denominator in this family
-  // derives from aggregates/windows ABOVE the day grain.
-  private val dailyMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+  // single-core trap). Divide guards are unaffected by the lineage
+  // cut: every denominator in this family derives from
+  // aggregates/windows ABOVE the day grain.
   private[graft] def sharedDailyRevenue(s: SparkSession, dir: String): DataFrame =
-    dailyMemo.computeIfAbsent((s, dir), _ =>
+    SessionMemo("timeseries", s, dir) {
       dailyRevenue(t(s, dir, "orders"))
         .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint())
+        .localCheckpoint()
+    }
 
   // Session-memoized STL decomposition per (session, dir) — decompose
   // is seasonalAnomalies' exact prefix (anomalies = residual z-scores
@@ -79,26 +74,12 @@ object TimeSeries {
   // cost was DOMINATED by that cold whole-stage-codegen (4.40 s in the
   // r12 pin vs 1.21 s for the same chain warm). One checkpointed copy
   // of the day-domain relation (≤ 37k rows/century — never
-  // corpus-scale) serves both keys. Same lifecycle and attribution
-  // caveats as [[sharedDailyRevenue]].
-  private val stlMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+  // corpus-scale) serves both keys.
   private[graft] def sharedStlResidual(s: SparkSession, dir: String): DataFrame =
-    stlMemo.computeIfAbsent((s, dir), _ =>
+    SessionMemo("stl", s, dir) {
       stlCore(t(s, dir, "orders"), Some(sharedDailyRevenue(s, dir)))
-        .localCheckpoint())
-
-  private[ext] def clearDailyMemo(): Unit = {
-    for (memo <- Seq(dailyMemo, stlMemo)) {
-      val it = memo.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next(); it.remove()
-        try e.getValue.unpersist()
-        catch { case _: Exception => () } // a stopped session's blocks are already gone
-      }
+        .localCheckpoint()
     }
-  }
 
   // ---- day-of-week seasonal profile -----------------------------------
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.GraftQuery
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{GraftSession, SessionMemo, Tables}
 
 /** Text analysis for training-data pipelines (north-star Tier B):
   * token counting (whitespace + BPE-ish regex), language-ID heuristic,
@@ -468,30 +468,12 @@ object TextOps {
     * string) plus a re-measured cost case — which the A/B above
     * already shows does not exist.
     */
-  def gopherRepetitionOf(docs: DataFrame, hashedGrams: Boolean = false,
-      sharedUnits: Boolean = false): DataFrame = {
-    // sharedUnits = true is PROBE-ONLY, MEASURED OUT in r13 (the r12
-    // verdict's item 3 — the third recorded rejection for this key):
-    // one doc_id-keyed exchange of the raw text feeding all three unit
-    // censuses + the final join does satisfy every downstream
-    // ClusteredDistribution (keys all start with doc_id; executed plan
-    // confirms 2 reuse lines and no unit-level exchange), but it LOSES
-    // the interleaved A/B decisively — GopherShareProbe, same-JVM
-    // A/B/A/B: sf0.1 median 5.11 s shared vs 4.20 s unshared, sf1
-    // 14.74 vs 10.01 s (−47%). Why the §2.4 unification does not
-    // transfer here: each census RE-READS (decompresses) the full
-    // shuffled raw text from the shared exchange — 4 shuffle-read
-    // passes over corpus text — while the unshared censuses each scan
-    // cached columnar parquet and shuffle only map-side-COMBINED unit
-    // streams, which the shared shape's post-exchange complete
-    // aggregation gives up. The substring/setsim precedent shuffles
-    // hashed TOKENS either way; here the shared exchange carries raw
-    // text, which is the heavier payload.
-    val src =
-      if (sharedUnits) docs.select(col("doc_id"), col("text"))
-        .repartition(col("doc_id"))
-      else docs
-    val base = src
+  def gopherRepetitionOf(docs: DataFrame,
+      hashedGrams: Boolean = false): DataFrame = {
+    // one doc_id-keyed exchange feeding all three unit censuses was
+    // measured out in r13 (OPTIMIZATION_r13.md): each census re-reads
+    // the shuffled raw text, so the shared shape lost the A/B by 47%
+    val base = docs
       .select(col("doc_id"), coalesce(col("text"), lit("")).as("__t"),
         normalizeText(col("text")).as("__norm"))
       .withColumn("__nc", length(col("__norm")).cast("long"))
@@ -889,26 +871,12 @@ object TextOps {
   // q_bpe_encode, q_sequence_pack_bpe) each ran the identical corpus
   // word census + 3-round greedy merge; the memo pays it once per
   // Verify/Bench run. bpeTrainCore's rounds are already eagerly
-  // checkpointed, so the memo's only job is cross-key reuse — same
-  // lifecycle as the other memos, released by Dedup.clearSessionMemos
-  // via [[clearBpeMemo]]. Per-key numbers for the trio are attribution
-  // (the Bench docstring's shared-memo caveat).
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
-
-  private[graft] def bpeTrainShared(s: org.apache.spark.sql.SparkSession,
+  // checkpointed, so the memo's only job is cross-key reuse.
+  private[graft] def bpeTrainShared(s: SparkSession,
       dir: String, iters: Int = 3): (DataFrame, DataFrame) = {
     require(iters == 3, s"bpeTrainShared is memoized for iters = 3 only, got $iters")
-    bpeMemo.computeIfAbsent((s, dir), _ =>
-      bpeTrainCore(t(s, dir, "documents"), iters))
-  }
-
-  private[graft] def clearBpeMemo(): Unit = {
-    val it = bpeMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try { e.getValue._1.unpersist(); e.getValue._2.unpersist() }
-      catch { case _: Exception => () } // a stopped session's blocks are already gone
+    SessionMemo("bpe", s, dir) {
+      bpeTrainCore(t(s, dir, "documents"), iters)
     }
   }
 

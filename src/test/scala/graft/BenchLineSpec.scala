@@ -63,6 +63,17 @@ class BenchLineSpec extends AnyFunSuite {
     }
   }
 
+  test("an omitted key above 99999.999 s is clamped into the reserved width") {
+    // every key a million times slower: the omitted ones
+    // run from 50,000 to over 1,000,000 s
+    val slow = entries.map { case (k, v) => (k, v * 1e6) }
+    val line = Bench.compactTotalLine(slow, 0, load, sf)
+    assert(line.length <= 1650)
+    val node = mapper.readTree(line)
+    assert(node.get("queries_omitted").asInt() > 0)
+    assert(node.get("omitted_max_s").asDouble() == 99999.999)
+  }
+
   test("small maps are carried whole (SPARK_GRAFT_ONLY iteration runs)") {
     val few = entries.take(10)
     val line = Bench.compactTotalLine(few, 0, load, sf)
